@@ -699,42 +699,36 @@ class Database(val spark: SparkSession, val root: String,
       rows.persist() // consumed twice: the count and the append
       try { val n = rows.count(); table(tbl).write(rows); rowcount(n) }
       finally { rows.unpersist(); () }
-    // metadata-only COUNT(*) (c28): the bare-count statement answers
-    // from the stats sidecar alone when its coverage is exact — the
-    // table formats' O(#files) COUNT on the reference's raw-SQL surface
-    // (zero data-file I/O; the serving plan's input files are the
-    // sidecar's). Stale/no coverage falls through to the normal scan.
-    case Database.CountStarRe(alias, tbl)
-        if tables.exists(_.equalsIgnoreCase(tbl)) =>
-      table(tbl).countFromStats match {
-        case Some(meta) =>
-          meta.select(col("n_rows")
-            .as(Option(alias).getOrElse("count(1)"))) // Spark's default name
-        case None => // stale/no sidecar — the conservative scan
-          ensureRegistered(referencedRelations(stmt)); spark.sql(stmt)
-      }
-    case _ =>
+    // a served metadata statement binds no view: its answer comes from
+    // the sidecar alone, and a view bound here would pin a file listing
+    // that an out-of-band write could make stale for the next statement
+    case _ => metadataAggStatement(stmt).getOrElse {
       ensureRegistered(referencedRelations(stmt))
-      metadataAggStatement(stmt).getOrElse(executeWithSkipping(stmt))
+      executeWithSkipping(stmt)
+    }
   }
 
-  /** Metadata-only MIN/MAX/COUNT statements (c32 — c28 generalized): a
-    * whole-table aggregate list `SELECT min(a) AS x, max(b) AS y,
-    * count(*) AS n FROM t` answers from the stats sidecar alone
-    * ([[Table.aggsFromStats]], zero data-file I/O) when every referenced
-    * column is tracked and coverage is exact. Matched on the PARSED plan
-    * (a Project of only min/max/count calls directly over a known
-    * physical table — any GROUP BY/join/extra expression falls
-    * through), and only when every item carries an alias (the fallback
-    * scan then agrees on names by construction). A WHERE is accepted
-    * since r15 when the per-file bands DECIDE it exactly for every file
-    * ([[Table.aggsFromStatsFiltered]], c34) — a straddling file, a null
-    * in a referenced column, or any unevaluable predicate shape refuses.
-    * None → the normal route, identical answer at scan cost.
+  /** Metadata-only aggregate statements (c28 COUNT(*), c32 MIN/MAX/
+    * COUNT/SUM/AVG): a whole-table aggregate list `SELECT min(a) AS x,
+    * max(b) AS y, count(*) AS n FROM t` answers from the stats sidecar
+    * alone ([[Table.aggsFromStats]], zero data-file I/O) when every
+    * referenced column is tracked and coverage is exact — the table
+    * formats' O(#files) COUNT on the reference's raw-SQL surface.
+    * Matched on the PARSED plan (a Project of only aggregate calls
+    * directly over a known physical table — any GROUP BY/join/extra
+    * expression falls through), and only when every item carries an
+    * alias, so the fallback scan agrees on names by construction; the
+    * one unaliased item accepted is `count(*)`/`count(1)`, named
+    * `count(1)` as Spark names it. A WHERE is accepted since r15 when
+    * the per-file bands DECIDE it exactly for every file (c34) — a
+    * straddling file, a null in a referenced column, or any unevaluable
+    * predicate shape refuses. None → the normal route, identical answer
+    * at scan cost.
     */
   private def metadataAggStatement(stmt: String): Option[DataFrame] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
-      UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias,
+      UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation,
+      UnresolvedStar}
     import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project,
       SubqueryAlias}
@@ -756,17 +750,7 @@ class Database(val spark: SparkSession, val root: String,
         }
         for {
           rel <- relName
-          tbl <- tables.find(t => viewNameOf(t).equalsIgnoreCase(rel))
-          // the statement's view is already bound (ensureRegistered runs
-          // first) and carries the declared-schema overlay — probing it
-          // costs zero sidecar reads, where `table(tbl).df.schema` paid
-          // a second `.properties` round trip per agg statement (r18:
-          // one props read per table reference)
-          schema <- scala.util.Try(spark.table(viewNameOf(tbl)).schema)
-            .toOption
           specs <- {
-            def cased(c: String): Option[String] = schema.fields.collectFirst {
-              case f if f.name.equalsIgnoreCase(c) => f.name }
             val ss = exprs.map {
               case Alias(f: UnresolvedFunction, name)
                   if !f.isDistinct && f.nameParts.length == 1 =>
@@ -778,7 +762,7 @@ class Database(val spark: SparkSession, val root: String,
                   // COUNT(c) excludes nulls — served as n_rows − nnull_c
                   case ("count", Seq(u: UnresolvedAttribute))
                       if u.nameParts.length == 1 =>
-                    cased(u.name).map(c => ("countcol", c, name))
+                    Some(("countcol", u.nameParts.head, name))
                   // SUM/AVG serve from the exact per-file BIGINT sums
                   // analyzeStats records for integral tracked columns
                   // (r15 — one step past the table formats' metadata
@@ -787,18 +771,28 @@ class Database(val spark: SparkSession, val root: String,
                   case (fn @ ("min" | "max" | "sum" | "avg"),
                       Seq(u: UnresolvedAttribute))
                       if u.nameParts.length == 1 =>
-                    cased(u.name).map(c => (fn, c, name))
+                    Some((fn, u.nameParts.head, name))
                   case _ => None
                 }
+              case UnresolvedAlias(f: UnresolvedFunction, _)
+                  if !f.isDistinct &&
+                    f.nameParts.map(_.toLowerCase) == Seq("count") &&
+                    (f.arguments match {
+                      case Seq(_: UnresolvedStar) | Seq(Literal(1, IntegerType)) => true
+                      case _ => false
+                    }) =>
+                Some(("count", "", "count(1)"))
               case _ => None
             }
             if (ss.nonEmpty && ss.forall(_.nonEmpty)) Some(ss.flatten)
             else None
           }
-          out <- condOpt match {
-            case None    => table(tbl).aggsFromStats(specs)
-            case Some(c) => table(tbl).aggsFromStatsFiltered(specs, c)
+          // an ambiguous name is left to ensureRegistered's loud failure
+          tbl <- tables.filter(t => viewNameOf(t).equalsIgnoreCase(rel)) match {
+            case Seq(t) => Some(t)
+            case _      => None
           }
+          out <- table(tbl).aggsFromStats(specs, condOpt)
         } yield out
       case _ => None
     }
@@ -2307,13 +2301,6 @@ object Database {
     */
   private[api] val VersionedRef = java.util.regex.Pattern.compile(
     """(?i)\bVERSION\s+AS\s+OF\b|\bTIMESTAMP\s+AS\s+OF\b|\bDIFF\s+FROM\s+\d+\s+TO\s+\d+""")
-
-  /** `SELECT COUNT(*) [AS a] FROM t` — the bare-count statement shape the
-    * metadata-only rewrite serves (c28). Any WHERE/GROUP BY/JOIN falls
-    * through to the general branch.
-    */
-  private val CountStarRe =
-    """(?is)SELECT\s+COUNT\(\s*\*\s*\)(?:\s+AS\s+([A-Za-z0-9_]+))?\s+FROM\s+([A-Za-z0-9_.]+)\s*;?\s*""".r
 
   /** `DELETE FROM t [WHERE p]` — full-statement match, optional `;`. */
   private val DeleteRe =

@@ -252,7 +252,7 @@ class Table(val db: Database, val qualified: String) {
       catch { case scala.util.control.NonFatal(_) => Nil }
     db.store(aligned, qualified, "append", chunkSize, partitionBy = partCols)
     if (hasStats)
-      extendStats(currentDataFiles().map(_._1).filterNot(before),
+      extendStats(Nil, currentDataFiles().map(_._1).filterNot(before),
         Some(target))
     // Optimistic-commit visibility for appends (r17): once version
     // tracking is active (first DML CAS created the marker dir), a
@@ -317,15 +317,11 @@ class Table(val db: Database, val qualified: String) {
     // version captured BEFORE the file listing: the commit CAS refuses
     // if any other writer commits in between (optimistic concurrency)
     val v0 = Table.versionOf(path)
-    val dnfs = Table.pruneDnf(db.spark, where)
-    val split = (if (dnfs.nonEmpty) dnfHitMap(dnfs) else None).map { m =>
-      currentDataFiles().partition { case (abs, _) =>
-        m.getOrElse(normFileUri(abs), true) }
-    }
-    split match {
-      case Some((touched, _)) if touched.isEmpty =>
+    lazy val files = currentDataFiles()
+    candidateFiles(Table.pruneDnf(db.spark, where), files) match {
+      case Some(touched) if touched.isEmpty =>
         0L // no file's bands intersect the predicate — nothing to delete
-      case Some((touched, untouched)) if untouched.nonEmpty =>
+      case Some(touched) if touched.size < files.size =>
         cowDeleteFiles(where, touched, v0)
       case _ => // no usable sidecar, or every file is a candidate
         val total = df.count()
@@ -360,16 +356,12 @@ class Table(val db: Database, val qualified: String) {
       assigns.foldLeft(src) { case (d, (c, rhs)) =>
         d.withColumn(c, when(matchedCond, rhs).otherwise(col(c))) }
         .select(schema.fieldNames.toSeq.map(col): _*)
-    val split = where.toSeq.flatMap(w => Table.pruneDnf(db.spark, w)) match {
-      case Nil  => None
-      case dnfs => dnfHitMap(dnfs).map { m =>
-        currentDataFiles().partition { case (abs, _) =>
-          m.getOrElse(normFileUri(abs), true) } }
-    }
-    split match {
-      case Some((touched, _)) if touched.isEmpty =>
+    lazy val files = currentDataFiles()
+    candidateFiles(where.toSeq.flatMap(w => Table.pruneDnf(db.spark, w)),
+        files) match {
+      case Some(touched) if touched.isEmpty =>
         0L // no file's bands intersect the predicate — nothing to update
-      case Some((touched, untouched)) if untouched.nonEmpty =>
+      case Some(touched) if touched.size < files.size =>
         val touchedDf = db.loadFiles(path, touched.map(_._1), Some(schema))
         val matched = touchedDf.filter(matchedCond).count()
         if (matched == 0L) 0L // bands over-approximated: no hit, no churn
@@ -460,7 +452,7 @@ class Table(val db: Database, val qualified: String) {
       if (x.name == f.name) x.copy(dataType = to) else x)).toDDL))
     // retype the skipping sidecar ALONGSIDE the table (r17 ADVICE): its
     // min_/max_ columns mirror the column's type, so segments appended
-    // AFTER the widening (extendStats/retargetStats, typed from the
+    // AFTER the widening ([[extendStats]], typed from the
     // evolved read schema) would otherwise sit widened next to
     // narrow-typed older segments — and a plain directory read with
     // mergeSchema off picks one footer's schema, throwing at execution
@@ -481,12 +473,7 @@ class Table(val db: Database, val qualified: String) {
           }: _*))
       } catch {
         case scala.util.control.NonFatal(e) =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"alterColumnType: sidecar retype failed at $path - dropping " +
-              s"the sidecar (skipping degrades to full scans until the " +
-              s"next analyzeStats): $e")
-          try { Fs.delete(Fs.path(path + ".stats")): Unit }
-          catch { case scala.util.control.NonFatal(_) => }
+          dropStats(s"alterColumnType: sidecar retype failed ($e)")
       }
     }
     db.markDirty()
@@ -863,11 +850,8 @@ class Table(val db: Database, val qualified: String) {
       case _ => None
     }.headOption
     def hitFilter(where: String): Seq[(String, String)] =
-      dnfHitMap(Table.pruneDnf(db.spark, where)) match {
-        case Some(m) => allFiles.filter { case (abs, _) =>
-          m.getOrElse(normFileUri(abs), true) }
-        case None => allFiles
-      }
+      candidateFiles(Table.pruneDnf(db.spark, where), allFiles)
+        .getOrElse(allFiles)
     // a small key set prunes PER-POINT (the IN-list DNF from c31): a
     // CDC batch of scattered keys would make a [min,max] envelope span
     // the whole table, but each point still only hits the files whose
@@ -981,7 +965,7 @@ class Table(val db: Database, val qualified: String) {
     Fs.delete(Fs.path(stage)): Unit
     db.markDirty()
     db.spark.catalog.refreshByPath(path)
-    retargetStats(touched.map(_._1), promoted, Some(replacement.schema))
+    extendStats(touched.map(_._1), promoted, Some(replacement.schema))
   }
 
   /** Move every staged data file into the live tree (same partition
@@ -1012,9 +996,9 @@ class Table(val db: Database, val qualified: String) {
   /** The sidecar's CURRENT entries: the raw segment union minus removal
     * TOMBSTONES. A tombstone is a row with `n_rows = -1` (real entries
     * are always >= 0) whose `file` carries the removed entry's exact
-    * raw spelling — appended as one segment by [[retargetStats]], so a
-    * COW swap's sidecar maintenance is O(delta) like [[extendStats]]'s
-    * appends, never a full rewrite. Every metadata reader folds through
+    * raw spelling — appended by [[extendStats]] in the same segment as
+    * the commit's fresh bands, so a COW swap's sidecar maintenance is
+    * O(delta), never a full rewrite. Every metadata reader folds through
     * here; [[compactStatsIfNeeded]]'s periodic fold makes the
     * tombstones physical (drops both row classes) at the segment
     * budget — Delta's commit-log + checkpoint shape on the sidecar
@@ -1023,105 +1007,6 @@ class Table(val db: Database, val qualified: String) {
   private def statsFolded(raw: DataFrame): DataFrame = {
     val tomb = raw.filter(col("n_rows") < 0L).select("file")
     raw.filter(col("n_rows") >= 0L).join(tomb, Seq("file"), "left_anti")
-  }
-
-  /** Delta-maintain the sidecar across a copy-on-write file swap: the
-    * removed files' entries are masked by ONE appended tombstone
-    * segment ([[statsFolded]]), the promoted files get fresh bands as
-    * one more segment (an O(removed + promoted) data scan + O(1)
-    * metadata appends — never the r16 full-sidecar rewrite, which at
-    * millions of files made every DML pay O(#files) write I/O).
-    * Best-effort, like [[extendStats]]: the post-swap sidecar is
-    * already SAFE without this (removed entries are ignored by the
-    * live-listing intersection, promoted files are uncovered → always
-    * scanned, exact-coverage gates the metadata route), so any failure
-    * just logs and leaves it.
-    */
-  private def retargetStats(
-      removed: Seq[String], promoted: Seq[String],
-      promotedSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Unit = {
-    if (!hasStatsSidecar) return
-    try {
-      val existing = statsDf()
-      val schema = existing.schema
-      val tracked = schema.fieldNames.toSeq
-        .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-      if (tracked.isEmpty) return
-      val gone = removed.map(normFileUri).toSet
-      // ONE appended segment per swap (r18 optimization: the r17 shape
-      // wrote the tombstones and the fresh bands as two separate append
-      // jobs — fused, the swap's sidecar maintenance is a single write
-      // job carrying both row classes; fold semantics are unchanged
-      // because segments are unioned by the directory read either way).
-      val tombSeg: Option[DataFrame] = if (removed.isEmpty) None else {
-        // the removed entries' RAW spellings (input_file_name URIs), so
-        // the fold's anti-join matches on plain string equality. The
-        // filter runs ON THE CLUSTER (a broadcast of the O(delta)
-        // removed set + a typed filter over the sidecar's file column)
-        // and the tombstone segment is written from there — at millions
-        // of sidecar entries NOTHING flows through the driver, where the
-        // r17 shape collected every file URI per DML swap (the r17
-        // verdict's driver-side hot-path bottleneck, wrong #4)
-        val goneB = db.spark.sparkContext.broadcast(gone)
-        import db.spark.implicits._
-        val tombCols = schema.fields.toSeq.map { f =>
-          f.name match {
-            case "file"   => col("file")
-            case "n_rows" => lit(-1L).cast(f.dataType).as("n_rows")
-            case other    => lit(null).cast(f.dataType).as(other)
-          }
-        }
-        Some(existing.select("file").as[String]
-          .filter(r => goneB.value.contains(Table.normFileUri(r)))
-          .distinct()
-          .toDF("file")
-          .select(tombCols: _*))
-      }
-      if (promoted.nonEmpty) {
-        val fresh = perFileStats(
-          db.loadFiles(path, promoted, promotedSchema), promoted,
-          tracked).select(schema.fieldNames.toSeq.map(col): _*)
-        // TYPE DRIFT guard (extendStats' policy, applied to the DML
-        // path too): after an ALTER COLUMN TYPE widening a fresh
-        // segment would carry widened min_/max_/sum_ types next to
-        // narrow-typed older segments, and a plain directory read
-        // (mergeSchema off) picks ONE footer's schema — an INT request
-        // over a LONG-physical segment then throws at execution inside
-        // every metadata route (the r17 ADVICE mixed-footer hazard).
-        // alterColumnType retypes the sidecar eagerly, so drift here
-        // means that retype failed — drop the sidecar (conservative
-        // full scans, rebuildable) rather than append a segment that
-        // poisons every directory read. A down-cast instead would
-        // silently wrap out-of-range band values: UNSOUND skipping.
-        val drift = schema.fields.exists(f =>
-          fresh.schema(f.name).dataType != f.dataType)
-        if (drift) {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"retargetStats: sidecar schema drift at $path (table schema " +
-              s"evolved since the analyze) - dropping the sidecar " +
-              s"(skipping degrades to full scans until the next " +
-              s"analyzeStats)")
-          Fs.delete(Fs.path(path + ".stats")): Unit
-          db.spark.catalog.refreshByPath(path + ".stats")
-          return
-        }
-        val seg = tombSeg.map(_.unionByName(fresh)).getOrElse(fresh)
-        seg
-          .coalesce(1) // ONE segment per swap: tombstones + fresh bands
-          .write.mode("append").parquet(path + ".stats")
-      } else tombSeg.foreach(
-        _.coalesce(1).write.mode("append").parquet(path + ".stats"))
-      db.spark.catalog.refreshByPath(path + ".stats")
-      compactStatsIfNeeded()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"retargetStats: sidecar maintenance failed after a committed " +
-            s"COW delete at $path - leaving it (stale entries are ignored " +
-            s"by the live-file intersection; promoted files scan " +
-            s"conservatively until the next analyzeStats): $e")
-    } finally graft.Caches.drainStats()
   }
 
   /** Index façade (ref datum/table.py:98-104, datum/postgis/table.py:309-334,
@@ -1751,100 +1636,115 @@ class Table(val db: Database, val qualified: String) {
     db.spark.catalog.refreshByPath(path + ".stats")
   }
 
-  /** Delta-maintain the sidecar after an append (c25 — e99's O(epoch)
-    * lesson applied to the metadata tier): the append knows exactly
-    * which files it landed, so extend the sidecar by scanning ONLY
-    * those files instead of refusing ([[aggFromStats]]) or degrading
-    * to a full rescan. LOG-STRUCTURED (r15): the fresh entries land as
-    * ONE new segment file APPENDED into the `.stats` directory —
-    * O(appended files) data I/O + O(1) metadata writes, never the
-    * whole-sidecar rewrite (which at millions of files under a trickle
-    * of appends was quadratic metadata churn — Delta's O(delta) commit
-    * log + periodic checkpoint, applied here). Readers union the
-    * segments for free (one parquet directory read); once the segment
-    * count passes [[Table.StatsSegmentBudget]] the sidecar folds back
-    * to a single file through the staged swap (the f31/f35 policy-
-    * compaction recipe; crash residue is vacuum's existing
-    * `.stats.stage_*` class). No-op when no sidecar exists; an
-    * unreadable sidecar is left alone (the conservative paths already
-    * handle it).
+  /** Delta-maintain the sidecar after a commit that removed and/or added
+    * data files — the one sidecar write route behind appends (c25) and
+    * the copy-on-write swaps of DELETE/UPDATE/MERGE. LOG-STRUCTURED
+    * (r15): ONE segment is APPENDED into the `.stats` directory, holding
+    * tombstones for the `removed` files ([[statsFolded]] masks their
+    * entries) and fresh bands for the `added` ones — O(removed + added)
+    * data I/O and O(1) metadata writes, never the whole-sidecar rewrite
+    * (which at millions of files under a trickle of commits was
+    * quadratic metadata churn — Delta's O(delta) commit log + periodic
+    * checkpoint, applied here). Readers union the segments for free
+    * (one parquet directory read); once the segment count passes
+    * [[Table.StatsSegmentBudget]] the sidecar folds back to a single
+    * file through the staged swap (crash residue is vacuum's existing
+    * `.stats.stage_*` class). No-op when no sidecar exists or it tracks
+    * nothing; an unreadable sidecar is left alone (the conservative
+    * paths already handle it).
     *
-    * Runs AFTER the data append has committed, so no failure here may
-    * fail the write (a thrown exception would report failure for data
-    * that actually landed and invite a duplicate retry). Failure
-    * containment distinguishes the two states a failure can leave:
-    * a sidecar that still READS is merely STALE — it no longer covers
-    * the appended files, which is exactly the safe state (skipping
-    * scans uncovered files unconditionally, the metadata routes refuse
-    * on inexact coverage) — so it is LEFT IN PLACE, keeping the
-    * acceleration for the 99% of files it still bands. Only a sidecar
-    * the failure left UNREADABLE (a torn segment) is dropped: that
-    * state disables every accelerated path anyway and would never heal
-    * on its own.
+    * Runs AFTER the data commit, so no failure here may fail the
+    * caller (a thrown exception would report failure for data that
+    * actually landed and invite a duplicate retry). One failure rule
+    * for every caller: a sidecar that still READS at its own schema is
+    * merely STALE — it no longer covers the committed files, which is
+    * exactly the safe state (skipping scans uncovered files, entries of
+    * removed files never match the live listing, the metadata route
+    * refuses on inexact coverage) — so it is LEFT IN PLACE. Any other
+    * sidecar is dropped: schema drift (a segment whose column types no
+    * longer match what a fresh analyze produces — the table's schema
+    * evolved since the analyze, or the sidecar was hand-edited) would
+    * make a plain directory read pick one footer's types and serve
+    * wrong values or throw, and a torn sidecar disables every
+    * accelerated path without ever healing on its own.
     */
-  private def extendStats(appended: Seq[String],
-      appendedSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Unit = {
-    if (appended.isEmpty) return
-    val existingSchema = try {
-      val sc = statsDf().schema
-      if (!sc.fieldNames.exists(_.startsWith("min_"))) return
-      sc
-    } catch { case _: Exception => return }
-    val tracked = existingSchema.fieldNames.toSeq
+  private def extendStats(removed: Seq[String], added: Seq[String],
+      addedSchema: Option[StructType]): Unit = {
+    if ((removed.isEmpty && added.isEmpty) || !hasStatsSidecar) return
+    val existing = try statsDf()
+      catch { case scala.util.control.NonFatal(_) => return }
+    val schema = existing.schema
+    val tracked = schema.fieldNames.toSeq
       .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    def drop(why: String): Unit = {
-      log.warn(s"extendStats: $why at $path - dropping the sidecar " +
-        s"(skipping degrades to full scans until the next analyzeStats)")
-      try { Fs.delete(Fs.path(path + ".stats")): Unit }
-      catch { case scala.util.control.NonFatal(_) => }
-    }
+    if (tracked.isEmpty) return
     try {
-      // align the segment to the analyze-time schema: every segment of
-      // one sidecar carries the same columns (a pre-r15 sidecar without
-      // nnull_ columns keeps its shape; mixed-schema segments would make
-      // plain directory reads see a random footer's columns)
-      val fresh = perFileStats(
-        db.loadFiles(path, appended, appendedSchema), appended, tracked)
-        .select(existingSchema.fieldNames.toSeq.map(col): _*)
-      // SCHEMA DRIFT is corruption, not a transient (the ADVICE
-      // distinction): a sidecar whose column types no longer match what
-      // a fresh analyze would produce (hand-edited, or the table's
-      // schema evolved since the analyze) would serve WRONG values to
-      // the metadata routes while reading "successfully" — drop it
-      // before an append could legitimize it with a mixed-type segment.
-      val drift = existingSchema.fields.find(f =>
-        fresh.schema(f.name).dataType != f.dataType)
+      // the removed entries' RAW spellings (input_file_name URIs), so
+      // the fold's anti-join matches on plain string equality. The
+      // filter runs ON THE CLUSTER (a broadcast of the O(delta) removed
+      // set) — at millions of sidecar entries nothing flows through the
+      // driver
+      val tombs = if (removed.isEmpty) None else {
+        val goneB = db.spark.sparkContext.broadcast(removed.map(normFileUri).toSet)
+        import db.spark.implicits._
+        Some(existing.select("file").as[String]
+          .filter(r => goneB.value.contains(Table.normFileUri(r)))
+          .distinct().toDF("file")
+          .select(schema.fields.toSeq.map { f => f.name match {
+            case "file"   => col("file")
+            case "n_rows" => lit(-1L).cast(f.dataType).as("n_rows")
+            case other    => lit(null).cast(f.dataType).as(other)
+          } }: _*))
+      }
+      // aligned to the analyze-time schema: every segment of one sidecar
+      // carries the same columns (a pre-r15 sidecar without nnull_
+      // columns keeps its shape)
+      val fresh = if (added.isEmpty) None else Some(perFileStats(
+        db.loadFiles(path, added, addedSchema), added, tracked)
+        .select(schema.fieldNames.toSeq.map(col): _*))
+      // drift drops rather than casts: a down-cast would silently wrap
+      // out-of-range band values — unsound skipping
+      val drift = fresh.flatMap(f => schema.fields.find(c =>
+        f.schema(c.name).dataType != c.dataType))
       if (drift.nonEmpty) {
-        drop(s"sidecar schema drift on '${drift.get.name}' " +
-          s"(${drift.get.dataType} vs fresh ${fresh.schema(drift.get.name).dataType})")
+        dropStats(s"extendStats: sidecar schema drift on '${drift.get.name}'")
         return
       }
-      fresh.coalesce(1) // one segment file per append
+      (tombs ++ fresh).reduce(_ unionByName _)
+        .coalesce(1) // ONE segment per commit: tombstones + fresh bands
         .write.mode("append").parquet(path + ".stats")
       db.spark.catalog.refreshByPath(path + ".stats")
       compactStatsIfNeeded()
     } catch {
       case scala.util.control.NonFatal(e) =>
-        // transient vs corruption: a sidecar that still READS with its
-        // entry-time schema is merely STALE — exactly the safe state
-        // (appended files scan conservatively, coverage gates the
-        // metadata routes) — keep it. Anything else is dropped.
-        val healthy = try {
+        val readable = try {
           val d = statsDf()
           d.count()
-          d.schema == existingSchema
+          d.schema == schema
         } catch { case scala.util.control.NonFatal(_) => false }
-        if (healthy)
-          log.warn(s"extendStats: sidecar maintenance failed after a " +
-            s"committed append at $path - leaving the (readable, stale) " +
-            s"sidecar in place: the appended files scan conservatively " +
-            s"and the metadata routes refuse on coverage until the next " +
-            s"append or analyzeStats: $e")
-        else drop(s"sidecar maintenance failed and left the sidecar " +
-          s"unhealthy ($e)")
+        if (readable)
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"extendStats: sidecar maintenance failed after a committed " +
+              s"change at $path - leaving the (readable, stale) sidecar in " +
+              s"place: the committed files scan conservatively and the " +
+              s"metadata routes refuse on coverage until the next " +
+              s"analyzeStats: $e")
+        else dropStats(s"extendStats: sidecar maintenance failed and left " +
+          s"the sidecar unreadable ($e)")
     } finally graft.Caches.drainStats()
+  }
+
+  /** Drop the skipping sidecar: skipping degrades to full scans and the
+    * metadata routes refuse until the next [[analyzeStats]]. Best-effort
+    * — it runs on paths whose data commit already happened.
+    */
+  private def dropStats(why: String): Unit = {
+    org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"$why at $path - dropping the sidecar (skipping degrades to full " +
+        "scans until the next analyzeStats)")
+    try {
+      Fs.delete(Fs.path(path + ".stats")): Unit
+      db.spark.catalog.refreshByPath(path + ".stats")
+    } catch { case scala.util.control.NonFatal(_) => }
   }
 
   /** Fold the sidecar's append-log segments back to one file when their
@@ -1936,17 +1836,8 @@ class Table(val db: Database, val qualified: String) {
   private[api] def prunedScanDnf(
       dnfs: Seq[Seq[Seq[(String, Option[Any], Option[Any])]]])
       : Option[DataFrame] = {
-    val entries = dnfHitMap(dnfs) match {
-      case Some(m) => m
-      case None    => return None
-    }
-    val all = readTargetFiles()
-    val chosen = all.filter { case (abs, _) =>
-      entries.get(normFileUri(abs)) match {
-        case Some(hit) => hit       // covered: scan only on range overlap
-        case None      => true      // uncovered (post-analyze append): scan
-      }
-    }
+    lazy val all = readTargetFiles()
+    val chosen = candidateFiles(dnfs, all).getOrElse(return None)
     // a pinned read mid-swap resolves some files into a backup root —
     // outside the table's basePath, so the explicit-file scan can't
     // bind them. Refuse the pruning (the caller's plain plan is the
@@ -1958,18 +1849,19 @@ class Table(val db: Database, val qualified: String) {
     else Some(db.loadFiles(path, chosen.map(_._1)))
   }
 
-  /** The sidecar band evaluation behind [[prunedScanDnf]] and the
-    * file-granular COW DELETE: per covered file, whether ANY row of it
-    * can satisfy the DNF band set (normalized path → hit). None = no
-    * usable sidecar or no usable band (the caller must treat every file
-    * as a candidate). Files NOT in the map are uncovered — always
-    * candidates. Sound by the band-necessity argument in
-    * [[prunedScanDnf]]'s scaladoc: a `false` here proves no matching
-    * row lives in the file.
+  /** The members of `files` (qualified path, relative path) whose rows
+    * can satisfy the DNF band set — the one sidecar band evaluation
+    * behind [[prunedScanDnf]], the COW DELETE/UPDATE split and MERGE's
+    * candidate discovery. A covered file survives when its bands can
+    * intersect; a file the sidecar does not cover always survives.
+    * None = no usable sidecar or no usable band (every file is a
+    * candidate). Sound by the band-necessity argument in
+    * [[prunedScanDnf]]'s scaladoc: a dropped file holds no matching row.
+    * `files` is listed only when the sidecar can prune.
     */
-  private def dnfHitMap(
-      dnfs: Seq[Seq[Seq[(String, Option[Any], Option[Any])]]])
-      : Option[Map[String, Boolean]] = {
+  private def candidateFiles(
+      dnfs: Seq[Seq[Seq[(String, Option[Any], Option[Any])]]],
+      files: => Seq[(String, String)]): Option[Seq[(String, String)]] = {
     if (!hasStatsSidecar || dnfs.isEmpty) return None
     val entries = try {
       val stats = statsFolded(statsDf())
@@ -2004,168 +1896,88 @@ class Table(val db: Database, val qualified: String) {
         .map(r => normFileUri(r.getString(0)) -> (!r.isNullAt(1) && r.getBoolean(1)))
         .toMap
     } catch { case _: Exception => return None } // no usable sidecar
-    Some(entries)
+    Some(files.filter { case (abs, _) => entries.getOrElse(normFileUri(abs), true) })
   }
 
   /** Metadata-only aggregate (c22): one row of (n_rows, min, max of
-    * `column`) answered from the [[analyzeStats]] sidecar ALONE — zero
-    * data-file I/O — but ONLY when the sidecar covers exactly the live
-    * file set; `None` otherwise (a file appended or rewritten since the
-    * analyze could change any of the three answers, so the caller must
-    * fall back to the data scan). The modern table formats' metadata
-    * COUNT/MIN/MAX: at 100 TB the answer costs O(#files) sidecar rows
-    * instead of a table scan. Per-file row counts include rows where
-    * `column` is null (count semantics match `COUNT(*)`); min/max
-    * ignore all-null files (their band is null).
+    * `column`) — [[aggsFromStats]] over the one column. `None` unless
+    * the sidecar tracks `column` and covers exactly the live file set.
     */
-  def aggFromStats(column: String): Option[DataFrame] = {
-    if (!hasStatsSidecar) return None
-    val stats = try {
-      val d = statsDf()
-      if (!d.columns.contains(s"min_$column")) return None
-      statsFolded(d)
-    } catch { case _: Exception => return None }
-    val covered = try stats.select("file").collect()
-      .map(r => normFileUri(r.getString(0))).toSet
-      catch { case _: Exception => return None }
-    val live = readTargetFiles()
-      .map { case (abs, _) => normFileUri(abs) }.toSet
-    if (covered != live) return None
-    Some(stats.agg(
-      sum(col("n_rows")).cast("long").as("n_rows"),
-      min(col(s"min_$column")).as(s"min_$column"),
-      max(col(s"max_$column")).as(s"max_$column")))
-  }
+  def aggFromStats(column: String): Option[DataFrame] =
+    aggsFromStats(Seq(("count", "", "n_rows"),
+      ("min", column, s"min_$column"), ("max", column, s"max_$column")))
 
-  /** Metadata-only COUNT(*) (c28): one row holding the table's row count
-    * summed from the [[analyzeStats]] sidecar — zero data-file I/O —
-    * under exactly [[aggFromStats]]'s coverage contract (None unless the
-    * sidecar covers precisely the live file set). Column-independent:
-    * any sidecar serves it, whatever columns it tracks, because n_rows
-    * is per-file. The raw-SQL surface routes `SELECT count(*) FROM t`
-    * here so the reference's `db.execute` gets the table formats'
-    * O(#files) COUNT instead of a table scan.
+  /** Metadata-only evaluation of an aggregate list — the one sidecar
+    * aggregate route behind [[aggFromStats]] and the raw-SQL statements
+    * (c28 COUNT(*), c32 MIN/MAX/COUNT, c34 filtered). Each spec is
+    * (fn, column, alias) with fn one of count, countcol, min, max, sum,
+    * avg ([[Table.specServable]]), answered from the [[analyzeStats]]
+    * sidecar ALONE — zero data-file I/O — and ONLY when the sidecar
+    * covers exactly the live file set (a file appended or rewritten
+    * since the analyze could change any answer). `None` means refuse:
+    * the caller's data scan gives the identical answer at scan cost.
+    *
+    * With a `cond` (r15), every covered file must be DECIDED by its
+    * bands: all-true files contribute their band/rowcount, all-false
+    * files drop, one straddler refuses the whole route. Decidability
+    * demands exactness, not just necessity, so the evaluation is
+    * three-valued interval logic ([[Table.triOf]]); a file with NULLs
+    * in a referenced column refuses too (its rows' predicate can
+    * evaluate NULL), which needs the `nnull_` columns analyzeStats
+    * records since r15 — a pre-r15 sidecar refuses. At 100 TB this is
+    * Iceberg's filtered metadata aggregate: O(#files) sidecar rows.
     */
-  /** Metadata-only evaluation of a whole-table aggregate list — the
-    * multi-column generalization of [[aggFromStats]]/[[countFromStats]]
-    * behind the raw-SQL route (c32): each spec is ("count", "", alias),
-    * ("min", col, alias), or ("max", col, alias), answered from the
-    * [[analyzeStats]] sidecar ALONE under the exact-coverage contract
-    * (None when a referenced column isn't tracked, coverage is stale,
-    * or there's no sidecar — the caller falls back to the data scan).
-    * Per-file min/max ignore all-null files (their band is null), which
-    * is exactly SQL MIN/MAX's null-skipping; count sums n_rows (null
-    * rows included — COUNT(*) semantics).
-    */
-  def aggsFromStats(specs: Seq[(String, String, String)]): Option[DataFrame] = {
-    if (specs.isEmpty || !hasStatsSidecar) return None
-    val stats = try statsFolded(statsDf())
-      catch { case _: Exception => return None }
-    if (!stats.columns.contains("n_rows")) return None
-    if (!specs.forall(s => Table.specServable(s, stats.columns))) return None
-    val covered = try stats.select("file").collect()
-      .map(r => normFileUri(r.getString(0))).toSet
-      catch { case _: Exception => return None }
-    val live = readTargetFiles()
-      .map { case (abs, _) => normFileUri(abs) }.toSet
-    if (covered != live) return None
-    val aggs = specs.map(Table.specAgg)
-    Some(stats.agg(aggs.head, aggs.tail: _*))
-  }
-
-  /** [[aggsFromStats]] with a WHERE (r15): `SELECT min(a), count(*) FROM
-    * t WHERE <cond>` still answers from the sidecar ALONE when the
-    * per-file bands DECIDE the predicate for EVERY covered file —
-    * all-true files contribute their band/rowcount, all-false files
-    * drop, and one straddler refuses the whole route (`None` — the
-    * caller's pruned scan gives the identical answer at scan cost).
-    * Decidability demands exactness, not just necessity, so the
-    * evaluation is three-valued interval logic over the parsed
-    * condition ([[Table.triOf]]) — comparisons/BETWEEN/IN of tracked
-    * columns vs literals under AND/OR/NOT; any other node refuses. A
-    * file with NULLs in a referenced column refuses too (its rows'
-    * predicate can evaluate NULL, which two-valued interval logic can't
-    * see) — that needs the `nnull_` columns analyzeStats records since
-    * r15, so a pre-r15 sidecar refuses (conservative). Same
-    * exact-coverage contract as every metadata route. At 100 TB this is
-    * Iceberg's filtered metadata aggregate: a time-range COUNT over a
-    * time-clustered corpus costs O(#files) sidecar rows, zero data I/O.
-    */
-  def aggsFromStatsFiltered(specs: Seq[(String, String, String)],
-      cond: org.apache.spark.sql.catalyst.expressions.Expression)
+  def aggsFromStats(specs: Seq[(String, String, String)],
+      cond: Option[org.apache.spark.sql.catalyst.expressions.Expression] = None)
       : Option[DataFrame] = {
     if (specs.isEmpty || !hasStatsSidecar) return None
     val stats = try statsFolded(statsDf())
-      catch { case _: Exception => return None }
-    if (!stats.columns.contains("n_rows")) return None
-    if (!specs.forall(s => Table.specServable(s, stats.columns))) return None
-    // every column the predicate references must be tracked WITH null
-    // counts; resolve case-insensitively to the sidecar's spelling
-    val refs = Table.referencedCols(cond) match {
-      case Some(rs) if rs.nonEmpty => rs
-      case _                       => return None
-    }
+      catch { case scala.util.control.NonFatal(_) => return None }
+    // columns resolve case-insensitively to the sidecar's spelling
     def side(prefix: String, c: String): Option[String] =
       stats.columns.find(_.equalsIgnoreCase(s"$prefix$c"))
-    val colMap = refs.map { c =>
-      (side("min_", c), side("max_", c), side("nnull_", c)) match {
-        case (Some(mn), Some(mx), Some(nn)) => c.toLowerCase -> (mn, mx, nn)
-        case _ => return None
-      }
-    }.toMap
-    val rows = try stats.collect() catch { case _: Exception => return None }
-    val covered = rows.map(r => normFileUri(r.getString(r.fieldIndex("file"))))
-      .toSet
-    val live = readTargetFiles()
-      .map { case (abs, _) => normFileUri(abs) }.toSet
-    if (covered != live) return None
-    // decide every covered file; one undecidable file refuses the route
-    val decided = rows.map { r =>
-      val nRows = r.getLong(r.fieldIndex("n_rows"))
-      if (nRows == 0L) Some(r -> false) // no rows: contributes nothing
-      else {
-        val nullsSeen = colMap.valuesIterator.exists { case (_, _, nn) =>
-          r.isNullAt(r.fieldIndex(nn)) || r.getLong(r.fieldIndex(nn)) > 0L }
-        if (nullsSeen) None
-        else {
-          def band(c: String): Option[(Any, Any)] =
-            colMap.get(c.toLowerCase).map { case (mn, mx, _) =>
-              (r.get(r.fieldIndex(mn)), r.get(r.fieldIndex(mx))) }
-          Table.triOf(cond, band) match {
-            case Some(Table.AllTrue)  => Some(r -> true)
-            case Some(Table.AllFalse) => Some(r -> false)
-            case _                    => None // straddles: needs a read
-          }
+    val cased = specs.map { case (fn, c, a) =>
+      (fn, side("min_", c).fold(c)(_.drop(4)), a) }
+    if (!stats.columns.contains("n_rows") ||
+        !cased.forall(s => Table.specServable(s, stats.columns))) return None
+    // every column the predicate references must be tracked WITH null
+    // counts
+    val filter = cond.map(c => c -> (Table.referencedCols(c) match {
+      case Some(rs) if rs.nonEmpty => rs.map { r =>
+        (side("min_", r), side("max_", r), side("nnull_", r)) match {
+          case (Some(mn), Some(mx), Some(nn)) => r -> (mn, mx, nn)
+          case _ => return None
         }
-      }
-    }
-    if (decided.exists(_.isEmpty)) return None
-    val keep = decided.flatten.collect { case (r, true) =>
-      r.getString(r.fieldIndex("file")) }.toSeq
-    val aggs = specs.map(Table.specAgg)
-    // aggregate over the all-true files' sidecar rows: answer types are
-    // the bands' (= the columns'), and the serving plan reads ONLY the
-    // sidecar (the gate's inputFiles assertion)
-    Some(stats.filter(col("file").isin(keep.map(_.asInstanceOf[Any]): _*))
-      .agg(aggs.head, aggs.tail: _*))
-  }
-
-  def countFromStats: Option[DataFrame] = {
-    if (!hasStatsSidecar) return None
-    val stats = try statsFolded(statsDf())
-      catch { case _: Exception => return None }
-    if (!stats.columns.contains("n_rows")) return None
+      }.toMap
+      case _ => return None
+    }))
     // the collect EXECUTES the sidecar read — a torn/mixed-footer
     // sidecar throws here, not at planning, so the guard must cover it
-    // (refuse → the caller's scan route) rather than fail the query
-    val covered = try stats.select("file").collect()
-      .map(r => normFileUri(r.getString(0))).toSet
-      catch { case _: Exception => return None }
-    val live = readTargetFiles()
-      .map { case (abs, _) => normFileUri(abs) }.toSet
-    if (covered != live) return None
-    Some(stats.agg(
-      coalesce(sum(col("n_rows")), lit(0L)).cast("long").as("n_rows")))
+    val rows = try stats.collect()
+      catch { case scala.util.control.NonFatal(_) => return None }
+    val live = readTargetFiles().map { case (abs, _) => normFileUri(abs) }
+    if (rows.map(r => normFileUri(r.getAs[String]("file"))).toSet != live.toSet)
+      return None
+    val served = filter.fold(stats) { case (c, cols) =>
+      // decide every covered file; one undecidable file refuses
+      val keep = rows.filter { r =>
+        def long(n: String) = r.getLong(r.fieldIndex(n))
+        if (long("n_rows") == 0L) false // no rows: contributes nothing
+        else if (cols.valuesIterator.exists { case (_, _, nn) =>
+            r.isNullAt(r.fieldIndex(nn)) || long(nn) > 0L }) return None
+        else Table.triOf(c, b => cols.get(b.toLowerCase).map {
+            case (mn, mx, _) => (r.getAs[Any](mn), r.getAs[Any](mx)) }) match {
+          case Some(Table.AllTrue)  => true
+          case Some(Table.AllFalse) => false
+          case _                    => return None // straddles: needs a read
+        }
+      }.map(_.getAs[String]("file"))
+      // the serving plan reads ONLY the sidecar (the gate's inputFiles
+      // assertion); answer types are the bands' (= the columns')
+      stats.filter(col("file").isin(keep.toSeq: _*))
+    }
+    val aggs = cased.map(Table.specAgg)
+    Some(served.agg(aggs.head, aggs.tail: _*))
   }
 
   /** URI/path string → bare filesystem path (decodes `%XX` specials),
@@ -2174,7 +1986,7 @@ class Table(val db: Database, val qualified: String) {
     * funnel through this, so `file:///a%20b`, `file:/a b`, and
     * `hdfs://nn/a b` all compare on the decoded path component.
     * Delegates to the static [[Table.normFileUri]] so executor-side
-    * closures (the distributed tombstone filter in [[retargetStats]])
+    * closures (the distributed tombstone filter in [[extendStats]])
     * never capture the non-serializable façade.
     */
   private def normFileUri(s: String): String = Table.normFileUri(s)
@@ -2782,6 +2594,23 @@ object Table {
     pruneBoundsBy(cond)(parts =>
       if (parts.length == 1) Some(parts.head) else None)
 
+  /** The Scala value of a non-null literal of an atomic orderable type
+    * (numeric, string, date, timestamp, boolean) — the one literal
+    * reading behind the bound extraction and the band decision
+    * ([[triOf]]); None for any other expression.
+    */
+  private def litValue(e: org.apache.spark.sql.catalyst.expressions
+      .Expression): Option[Any] = e match {
+    case l: org.apache.spark.sql.catalyst.expressions.Literal
+        if l.value != null => l.dataType match {
+      case _: NumericType | StringType | DateType | _: TimestampType |
+           TimestampNTZType | BooleanType => Some(org.apache.spark.sql
+        .catalyst.CatalystTypeConverters.convertToScala(l.value, l.dataType))
+      case _ => None
+    }
+    case _ => None
+  }
+
   /** The bound-extraction algebra with a pluggable attribute resolver:
     * `resolve` maps an attribute's name parts (e.g. `Seq("o",
     * "o_orderkey")` for a qualified `o.o_orderkey`) to an opaque column
@@ -2795,7 +2624,6 @@ object Table {
       : Seq[(C, Option[Any], Option[Any])] = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
       case other     => Seq(other)
@@ -2804,20 +2632,11 @@ object Table {
       case u: UnresolvedAttribute => resolve(u.nameParts)
       case _ => None
     }
-    def valOf(e: Expression): Option[Any] = e match {
-      case l: Literal if l.value != null => l.dataType match {
-        case _: NumericType | StringType | DateType | _: TimestampType |
-             TimestampNTZType | BooleanType =>
-          Some(CatalystTypeConverters.convertToScala(l.value, l.dataType))
-        case _ => None
-      }
-      case _ => None
-    }
     // (column, value, columnIsLeftOperand) for `col <cmp> lit` in either
     // operand order — a literal-first spelling flips the bound's side
     def split(a: Expression, b: Expression): Option[(C, Any, Boolean)] =
-      colOf(a).flatMap(cn => valOf(b).map(v => (cn, v, true)))
-        .orElse(colOf(b).flatMap(cn => valOf(a).map(v => (cn, v, false))))
+      colOf(a).flatMap(cn => litValue(b).map(v => (cn, v, true)))
+        .orElse(colOf(b).flatMap(cn => litValue(a).map(v => (cn, v, false))))
     conjuncts(nnf(cond)).flatMap {
       // OR-of-ranges: a disjunction bounds a column iff EVERY branch
       // bounds it on that side — then the union band is (min of branch
@@ -2838,11 +2657,11 @@ object Table {
       case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
           if f.nameParts.map(_.toLowerCase) == Seq("between") &&
             f.arguments.length == 3 =>
-        for (cn <- colOf(f.arguments(0)); l <- valOf(f.arguments(1));
-             h <- valOf(f.arguments(2)))
+        for (cn <- colOf(f.arguments(0)); l <- litValue(f.arguments(1));
+             h <- litValue(f.arguments(2)))
           yield (cn, Some(l): Option[Any], Some(h): Option[Any])
       case Between(in, lo, hi, _) =>
-        for (cn <- colOf(in); l <- valOf(lo); h <- valOf(hi))
+        for (cn <- colOf(in); l <- litValue(lo); h <- litValue(hi))
           yield (cn, Some(l): Option[Any], Some(h): Option[Any])
       case EqualTo(a, b) =>
         split(a, b).map { case (cn, v, _) => (cn, Some(v), Some(v)) }
@@ -2865,7 +2684,7 @@ object Table {
       // (and the sidecar min/max) actually use.
       case In(c, vs) if vs.nonEmpty => for {
         cn <- colOf(c)
-        lits = vs.map(valOf)
+        lits = vs.map(litValue)
         if lits.forall(_.nonEmpty)
         values = lits.flatten
         if values.map(_.getClass).distinct.lengthCompare(1) == 0 &&
@@ -2975,7 +2794,6 @@ object Table {
       : Seq[Seq[Seq[(C, Option[Any], Option[Any])]]] = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
       case other     => Seq(other)
@@ -3002,15 +2820,7 @@ object Table {
           case u: UnresolvedAttribute => resolve(u.nameParts)
           case _ => None
         }
-        val lits = vs.map {
-          case l: Literal if l.value != null => l.dataType match {
-            case _: NumericType | StringType | DateType | _: TimestampType |
-                 TimestampNTZType | BooleanType =>
-              Some(CatalystTypeConverters.convertToScala(l.value, l.dataType))
-            case _ => None
-          }
-          case _ => None
-        }
+        val lits = vs.map(litValue)
         (cn, lits) match {
           case (Some(n), ls) if ls.forall(_.nonEmpty) &&
               ls.flatten.map(_.getClass).distinct.lengthCompare(1) == 0 =>
@@ -3065,7 +2875,7 @@ object Table {
   }
 
   /** Three-valued interval evaluation for the FILTERED metadata route
-    * ([[Table.aggsFromStatsFiltered]]): does a file whose referenced
+    * ([[Table.aggsFromStats]] with a `cond`): does a file whose referenced
     * columns span the given [min, max] bands (no nulls, > 0 rows)
     * satisfy the predicate on EVERY row, on NO row, or possibly both?
     */
@@ -3108,19 +2918,9 @@ object Table {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
       UnresolvedFunction}
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
     def colBand(x: Expression): Option[(Any, Any)] = x match {
       case u: UnresolvedAttribute if u.nameParts.length == 1 =>
         band(u.name).filter { case (mn, mx) => mn != null && mx != null }
-      case _ => None
-    }
-    def litVal(x: Expression): Option[Any] = x match {
-      case l: Literal if l.value != null => l.dataType match {
-        case _: NumericType | StringType | DateType | _: TimestampType |
-             TimestampNTZType | BooleanType =>
-          Some(CatalystTypeConverters.convertToScala(l.value, l.dataType))
-        case _ => None
-      }
       case _ => None
     }
     def evalOp(mn: Any, mx: Any, v: Any, op: String): Option[Tri] =
@@ -3140,9 +2940,9 @@ object Table {
       case o    => o
     }
     def cmpAtom(a: Expression, b: Expression, op: String): Option[Tri] =
-      (colBand(a), litVal(b)) match {
+      (colBand(a), litValue(b)) match {
         case (Some((mn, mx)), Some(v)) => evalOp(mn, mx, v, op)
-        case _ => (litVal(a), colBand(b)) match {
+        case _ => (litValue(a), colBand(b)) match {
           case (Some(v), Some((mn, mx))) => evalOp(mn, mx, v, flip(op))
           case _ => None
         }

@@ -984,6 +984,19 @@ class ApiSpec extends AnyFunSuite {
     val row = a.collect()(0)
     assert(row.getLong(0) == 100L && row.getLong(1) == 1L &&
       row.getLong(2) == 100L, s"$row")
+    // c28 on the raw-SQL surface: COUNT(*) takes the same sidecar route,
+    // named as Spark names it when unaliased and by its alias otherwise
+    def sqlCount(q: String, name: String, metaOnly: Boolean): Long = {
+      val d = db2.execute(q)
+      assert(d.columns.toSeq == Seq(name), s"$q: ${d.columns.toSeq}")
+      assert(d.inputFiles.nonEmpty &&
+        d.inputFiles.forall(_.contains(".stats")) == metaOnly,
+        s"$q: ${d.inputFiles.toSeq}")
+      d.collect()(0).getLong(0)
+    }
+    assert(sqlCount("SELECT count(*) FROM meta", "count(1)", true) == 100L)
+    assert(sqlCount("SELECT COUNT(1) FROM meta", "count(1)", true) == 100L)
+    assert(sqlCount("SELECT count(*) AS n FROM meta", "n", true) == 100L)
     // façade append: the sidecar is delta-maintained (c25) — the
     // metadata answer tracks the append without a rescan
     tbl.write(Seq((101L, "x")).toDF("k", "v"))
@@ -991,10 +1004,15 @@ class ApiSpec extends AnyFunSuite {
       .getOrElse(fail("delta-maintained sidecar must keep serving"))
     val rb = b.collect()(0)
     assert(rb.getLong(0) == 101L && rb.getLong(2) == 101L, s"$rb")
+    // a served statement binds no view, so the scan that follows an
+    // out-of-band write below lists the files afresh
+    assert(sqlCount("SELECT count(*) FROM meta", "count(1)", true) == 101L)
     // out-of-band append (no façade): coverage breaks -> refuse
     Seq((102L, "y")).toDF("k", "v")
       .write.mode("append").parquet(db2.pathOf("meta"))
     assert(tbl.aggFromStats("k").isEmpty, "stale coverage -> refuse")
+    // the SQL count refuses the stale sidecar too: a data scan, same name
+    assert(sqlCount("SELECT count(*) FROM meta", "count(1)", false) == 102L)
   }
 
   test("pruneBounds: necessary conditions only — BETWEEN/cmp/IN extracted, OR/NOT/functions ignored") {
@@ -1303,23 +1321,40 @@ class ApiSpec extends AnyFunSuite {
     // poison the sidecar: replace it with one whose schema cannot union
     // with fresh per-file stats (min_k becomes an array) — the append's
     // data must still land and the write must NOT throw
-    val stats = t.path + ".stats"
-    val poisoned = spark.read.parquet(stats)
-      .withColumn("min_k", array(lit("x")))
-    val tmp = t.path + ".stats_poison"
-    poisoned.write.mode("overwrite").parquet(tmp)
-    def rmrf(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete(): Unit
+    def poison(tablePath: String, column: String): Unit = {
+      val stats = tablePath + ".stats"
+      val tmp = tablePath + ".stats_poison"
+      spark.read.parquet(stats).withColumn(column, array(lit("x")))
+        .write.mode("overwrite").parquet(tmp)
+      rmrf(new java.io.File(stats))
+      assert(new java.io.File(tmp).renameTo(new java.io.File(stats)))
+      spark.catalog.refreshByPath(stats)
     }
-    rmrf(new java.io.File(stats))
-    assert(new java.io.File(tmp).renameTo(new java.io.File(stats)))
-    spark.catalog.refreshByPath(stats)
+    poison(t.path, "min_k")
     t.write((101L to 150L).map(k => (k, s"v$k")).toDF("k", "v")) // must not throw
     assert(t.count == 150L, "the append landed despite sidecar failure")
     // containment dropped the sidecar -> skipping degrades to full scan
-    assert(!new java.io.File(stats).exists(),
+    assert(!new java.io.File(t.path + ".stats").exists(),
       "a failed maintenance must drop the sidecar, not leave a stale lie")
     assert(t.readPruned("k", 10L, 20L).count() == 11L)
+    // the COW DELETE swap maintains the sidecar through the same append:
+    // poison a column the predicate does not band on, so the split still
+    // prunes and the swap commits before the maintenance meets the poison
+    (1L to 100L).map(k => (k, k)).toDF("k", "j")
+      .repartitionByRange(2, col("k"))
+      .write.mode("overwrite").parquet(scratch.pathOf("poisondml"))
+    val d = scratch.table("poisondml")
+    d.analyzeStats(Seq("k", "j")): Unit
+    val filesBefore = d.df.inputFiles.toSet
+    poison(d.path, "min_j")
+    val deleted = scratch.execute("DELETE FROM poisondml WHERE k <= 10")
+      .collect()(0).getLong(0) // must not throw
+    assert(deleted == 10L && d.count == 90L, "the swap committed")
+    assert(d.df.inputFiles.exists(filesBefore.contains),
+      "the untouched file survives by reference (the COW path ran)")
+    assert(!new java.io.File(d.path + ".stats").exists(),
+      "a drifted sidecar is dropped on the DML path too")
+    assert(d.readPruned("k", 5L, 20L).count() == 10L)
   }
 
   test("extendStats transient failure LEAVES the readable sidecar (stale coverage stays safe)") {
@@ -1350,6 +1385,21 @@ class ApiSpec extends AnyFunSuite {
     // wrongly and a re-analyze restores coverage
     t.analyzeStats(Seq("k")): Unit
     assert(t.aggFromStats("k").nonEmpty)
+    // the COW DELETE swap meets the same transient failure: the swap
+    // commits and the readable, stale sidecar stays in place
+    val segsBefore = statsDir.list().toSet
+    new java.io.FileOutputStream(squatter).close()
+    val deleted =
+      try scratch.execute("DELETE FROM trans WHERE k > 110").collect()(0).getLong(0)
+      finally { squatter.delete(): Unit }
+    assert(deleted == 10L && t.count == 110L, "the swap committed")
+    assert(statsDir.exists && statsDir.list().toSet == segsBefore,
+      "a transient failure must LEAVE the readable sidecar as it was")
+    assert(t.aggFromStats("k").isEmpty, "stale coverage must refuse")
+    assert(t.readPruned("k", 101L, 120L).count() == 10L,
+      "skipping stays sound over the stale sidecar")
+    t.analyzeStats(Seq("k")): Unit
+    assert(t.aggFromStats("k").get.collect()(0).getLong(0) == 110L)
   }
 
   test("versioned-ref rewrite: unknown identifiers stay verbatim; a failed pin leaves no view residue") {
@@ -1463,11 +1513,25 @@ class ApiSpec extends AnyFunSuite {
     } finally { pool.shutdown(); () }
   }
 
+  /** This run's scratch warehouses live under a fresh per-run root; the
+    * parent is wiped when the suite starts, so tables an earlier run left
+    * in a reused `target/` can never leak into this one.
+    */
+  private lazy val scratchRoot: java.io.File = {
+    val parent = new java.io.File("target/fixtures/test/api").getAbsoluteFile
+    rmrf(parent)
+    new java.io.File(parent, java.util.UUID.randomUUID().toString)
+  }
+
+  private def rmrf(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete(): Unit
+  }
+
   private def scratchDb() = {
     scratchN += 1
-    val root = s"/root/repo/target/fixtures/test/api$scratchN"
-    new java.io.File(root).mkdirs()
-    Datum.connect(s"parquet://$root")
+    val root = new java.io.File(scratchRoot, s"api$scratchN")
+    root.mkdirs()
+    Datum.connect(s"parquet://${root.getPath}")
   }
 
   test("versioned-ref rewrite skips matches inside string literals (even for known tables)") {
@@ -1549,7 +1613,7 @@ class ApiSpec extends AnyFunSuite {
     val n = Seq(("count", "", "n"))
     // file-aligned predicates decide: answers match the scan exactly
     def served(w: String): Long =
-      tbl.aggsFromStatsFiltered(n, cond(w))
+      tbl.aggsFromStats(n, Some(cond(w)))
         .getOrElse(sys.error(s"must serve: $w")).collect()(0).getLong(0)
     assert(served("k <= 10") == 10L)
     assert(served("k BETWEEN 11 AND 20") == 10L)
@@ -1558,23 +1622,23 @@ class ApiSpec extends AnyFunSuite {
     assert(served("k > 900") == 0L)
     assert(served("k IN (999)") == 0L)
     // min/max take the all-true files' bands, typed like the column
-    val mm = tbl.aggsFromStatsFiltered(
-      Seq(("min", "k", "lo"), ("max", "k", "hi")), cond("k >= 11"))
+    val mm = tbl.aggsFromStats(
+      Seq(("min", "k", "lo"), ("max", "k", "hi")), Some(cond("k >= 11")))
       .getOrElse(sys.error("must serve")).collect()(0)
     assert(mm.getLong(0) == 11L && mm.getLong(1) == 20L)
     // filtered SUM/AVG serve from the same decided file set
-    val sa = tbl.aggsFromStatsFiltered(
-      Seq(("sum", "k", "s"), ("avg", "k", "a")), cond("k >= 11"))
+    val sa = tbl.aggsFromStats(
+      Seq(("sum", "k", "s"), ("avg", "k", "a")), Some(cond("k >= 11")))
       .getOrElse(sys.error("filtered sum/avg must serve")).collect()(0)
     assert(sa.getLong(0) == (11L to 20L).sum &&
       sa.getDouble(1) == (11L to 20L).sum.toDouble / 10.0)
     // a straddling boundary refuses (15 is inside file 2)
-    assert(tbl.aggsFromStatsFiltered(n, cond("k >= 15")).isEmpty)
+    assert(tbl.aggsFromStats(n, Some(cond("k >= 15"))).isEmpty)
     // a DOUBLE column vs an integer literal is cross-class non-integral
     // -> refuses even on a file-aligned boundary (the float-order trap)
-    assert(tbl.aggsFromStatsFiltered(n, cond("v <= 15.0")).isEmpty)
+    assert(tbl.aggsFromStats(n, Some(cond("v <= 15.0"))).isEmpty)
     // untracked column refuses
-    assert(tbl.aggsFromStatsFiltered(n, cond("z <= 10")).isEmpty)
+    assert(tbl.aggsFromStats(n, Some(cond("z <= 10"))).isEmpty)
     // a NULL in a referenced column refuses the route entirely (a null
     // row's predicate can evaluate NULL — 2-valued interval logic lies
     // under NOT), even though the bands would decide
@@ -1584,7 +1648,7 @@ class ApiSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(db3.pathOf("fmn"))
     val tbn = db3.table("fmn")
     tbn.analyzeStats(Seq("k")): Unit
-    assert(tbn.aggsFromStatsFiltered(n, cond("k <= 10")).isEmpty)
+    assert(tbn.aggsFromStats(n, Some(cond("k <= 10"))).isEmpty)
     // and the SQL route agrees end-to-end: decidable serves from the
     // sidecar, the null table scans
     val sql = db2.execute(
@@ -1630,8 +1694,8 @@ class ApiSpec extends AnyFunSuite {
     // not (file 1 holds null ks), so it refuses; the null-free fma
     // fixture in the filtered test covers the serving side
     def cond(w: String) = spark.sessionState.sqlParser.parseExpression(w)
-    assert(tbl.aggsFromStatsFiltered(
-      Seq(("sum", "k", "s")), cond("k >= 11")).isEmpty)
+    assert(tbl.aggsFromStats(
+      Seq(("sum", "k", "s")), Some(cond("k >= 11"))).isEmpty)
   }
 
   test("extendStats is log-structured: an append ADDS one segment (O(delta) metadata); the budget folds") {
@@ -2647,7 +2711,7 @@ class ApiSpec extends AnyFunSuite {
     assert(seg.filter(col("n_rows") < 0L).count() > 0, "tombstone rows")
     assert(seg.filter(col("n_rows") >= 0L).count() > 0, "fresh-band rows")
     // the folded sidecar still serves the exact metadata routes
-    val n = tbl.countFromStats.getOrElse(sys.error(
+    val n = tbl.aggsFromStats(Seq(("count", "", "n"))).getOrElse(sys.error(
       "the sidecar must keep serving the metadata count after a DML swap"))
       .collect()(0).getLong(0)
     assert(n == 189L, s"folded metadata count: $n")

@@ -22,8 +22,16 @@ def canon(rel):
     cols = sorted(rel.columns)
     rows = rel.df()[cols].values.tolist()
     def key(r):
-        return [((v is None) or (isinstance(v, float) and v != v), str(v)) for v in r]
+        return [(nullish(v), str(v)) for v in r]
     return cols, sorted(rows, key=key)
+
+def nullish(v):
+    return v is None or (isinstance(v, float) and v != v)
+
+def same(x, y):
+    # pandas reads a NULL in a numeric column as NaN, and nan != nan:
+    # NULL on both sides is a match, every other value compares exactly
+    return (nullish(x) and nullish(y)) or x == y
 
 def main(sf_dir, out_dir, json_out=None):
     con = duckdb.connect()
@@ -56,7 +64,8 @@ def main(sf_dir, out_dir, json_out=None):
         if len(orows) != len(srows):
             print(f"FAIL {name}: rows oracle={len(orows)} spark={len(srows)}"); n_fail += 1
             rec(name, schema_match=True, spark_rows=len(srows), oracle_rows=len(orows)); continue
-        bad = [(i, a, b) for i, (a, b) in enumerate(zip(orows, srows)) if a != b]
+        bad = [(i, a, b) for i, (a, b) in enumerate(zip(orows, srows))
+               if not all(same(x, y) for x, y in zip(a, b))]
         if bad:
             i, a, b = bad[0]
             print(f"FAIL {name}: {len(bad)}/{len(orows)} rows differ; first at {i}:\n  oracle={a}\n  spark ={b}")
