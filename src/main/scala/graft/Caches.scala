@@ -57,17 +57,35 @@ object Caches {
     * sf0.1). The memoized relations are pair/label tables — O(candidate
     * pairs), tiny relative to the corpus at any scale. [[clearMemo]] frees
     * them (harness end / tests that mutate their inputs).
+    *
+    * `version` names the state of the files the frame reads. An entry
+    * built at another version is unpersisted and rebuilt, and it must be
+    * unpersisted first: Spark's cache manager matches a plan over files
+    * whatever their current listing, so the fresh build would otherwise
+    * be served the stale copy.
+    *
+    * The IVF and PQ searches (`Similarity.ivfTopK`/`pqTopK` with a
+    * `memoKey`) also keep their encoded index here: `(id, list_id, emb)`
+    * for IVF, `(id, code0..code{m-1})` for PQ. Its key is the search kind,
+    * the `memoKey`, the id column and the input frame's analyzed-plan
+    * semantic hash, so another filter under the same `memoKey` builds its
+    * own index; its version is the frame's sorted input files, so an
+    * appended file replaces it. It lives until [[clearMemo]], and unlike
+    * the pair tables it is corpus-sized: one cached copy of the corpus
+    * (IVF, as doubles) or of its codes (PQ, m ints per vector) per key.
     */
-  private val memoMap = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val memoMap =
+    scala.collection.concurrent.TrieMap.empty[String, (String, DataFrame)]
 
-  def memo(key: String)(build: => DataFrame): DataFrame =
+  def memo(key: String, version: String = "")(build: => DataFrame): DataFrame =
     memoMap.get(key) match {
-      case Some(df) => df
-      case None =>
+      case Some((`version`, df)) => df
+      case stale =>
+        stale.foreach { e => if (memoMap.remove(key, e)) e._2.unpersist() }
         val df = build.persist()
         df.count(): Unit // pin the cache before upstream per-query caches drain
-        memoMap.putIfAbsent(key, df) match {
-          case Some(prior) => df.unpersist(); prior
+        memoMap.putIfAbsent(key, (version, df)) match {
+          case Some((_, prior)) => df.unpersist(); prior
           case None => df
         }
     }
@@ -98,7 +116,7 @@ object Caches {
   def putVal(key: String, v: Any): Unit = { memoValMap.putIfAbsent(key, v); () }
 
   def clearMemo(): Unit = {
-    memoMap.values.foreach(_.unpersist())
+    memoMap.values.foreach(_._2.unpersist())
     memoMap.clear()
     memoValMap.clear()
   }

@@ -12,7 +12,7 @@ package graft
 object PlanPins {
 
   /** Queries whose plans intentionally contain a BroadcastNestedLoopJoin:
-    *  - e4/e18: crossJoin against a BROADCAST SINGLE-ROW frame (the query
+    *  - e4: crossJoin against a BROADCAST SINGLE-ROW frame (the query
     *    vector) — O(n·1), the designed "compare every row to one constant"
     *    shape;
     *  - f9: the time-grid × event-types cross product IS the gap-fill
@@ -23,7 +23,7 @@ object PlanPins {
     * round-1 audit flagged (e8's old pair join).
     */
   val SingleRowCrossJoins: Set[String] =
-    Set("e4_similarity_topk", "e18_ann_ivf", "f9_gapfill",
+    Set("e4_similarity_topk", "f9_gapfill",
       // e29/e31: crossJoin against a broadcast single-row AGGREGATE (corpus
       // doc count / mixing normalizer) — O(n·1) constant attachment
       "e29_tfidf_keywords", "e31_source_mix",
@@ -31,14 +31,14 @@ object PlanPins {
       // set BY DESIGN (recall needs exact truth; O(n·|Q|) under a
       // broadcast) — the ANN side under evaluation stays an equi-join
       "e41_ann_recall",
-      // e58: e18's single-row query-vector crossJoin, over the probed +
+      // e58: e4's single-row query-vector crossJoin, over e18's probed +
       // metadata-filtered lists only
       "e58_ann_filtered",
       // e59: e41's class — exact ground truth AND the PQ side under
       // evaluation both sweep the corpus against the broadcast 3-query
       // sample (recall grading is O(n·|Q|) by definition)
       "e59_pq_recall",
-      // e64: e18's single-row query-vector crossJoin, over the two
+      // e64: e4's single-row query-vector crossJoin, over the two
       // partition-pruned list directories only
       "e64_ann_index_persist",
       // f26: e64's probe over the stream-appended index (same single-row

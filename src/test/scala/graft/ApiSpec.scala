@@ -263,7 +263,7 @@ class ApiSpec extends AnyFunSuite {
 
   test("orc, csv and json schemes: full facade over non-parquet sources") {
     for (fmt <- Seq("orc", "csv", "json")) {
-      val root = s"/root/repo/target/fixtures/test/fmt_$fmt"
+      val root = new java.io.File(scratchRoot, s"fmt_$fmt").getPath
       new java.io.File(root).mkdirs()
       val fdb = Datum.connect(s"$fmt://$root")
       fdb.store(db.table("nation").df, "nation", "overwrite")
@@ -324,7 +324,7 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("two databases in one session: execute reads each db's own tables") {
-    val root = "/root/repo/target/fixtures/test/iso"
+    val root = new java.io.File(scratchRoot, "iso").getPath
     new java.io.File(root).mkdirs()
     val other = Datum.connect(s"parquet://$root")
     other.store(db.table("nation").df.limit(3), "nation", "overwrite")
@@ -402,7 +402,7 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("execute sees writes made through a SECOND facade over the same root") {
-    val root = "/root/repo/target/fixtures/test/epoch"
+    val root = new java.io.File(scratchRoot, "epoch").getPath
     new java.io.File(root).mkdirs()
     val a = Datum.connect(s"parquet://$root")
     val b = Datum.connect(s"parquet://$root")
@@ -1513,9 +1513,9 @@ class ApiSpec extends AnyFunSuite {
     } finally { pool.shutdown(); () }
   }
 
-  /** This run's scratch warehouses live under a fresh per-run root; the
-    * parent is wiped when the suite starts, so tables an earlier run left
-    * in a reused `target/` can never leak into this one.
+  /** This run's scratch warehouses and fixture roots live under a fresh
+    * per-run root; the parent is wiped when the suite starts, so tables an
+    * earlier run left in a reused `target/` can never leak into this one.
     */
   private lazy val scratchRoot: java.io.File = {
     val parent = new java.io.File("target/fixtures/test/api").getAbsoluteFile
@@ -2887,13 +2887,7 @@ class ApiSpec extends AnyFunSuite {
     // file opts every table of its warehouse in, and scratch numbers
     // shift between filtered and full test runs — a leaked defaults
     // file must never poison an unrelated test's scratch
-    val root = "/root/repo/target/fixtures/test/whdefaults"
-    def preWipe(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(preWipe)
-      f.delete(): Unit
-    }
-    preWipe(new java.io.File(root))
+    val root = new java.io.File(scratchRoot, "whdefaults").getPath
     new java.io.File(root).mkdirs()
     val db2 = Datum.connect(s"parquet://$root")
     db2.setDefaultCowRetention(true)

@@ -535,6 +535,85 @@ class LlmSpec extends AnyFunSuite {
     assert(r1.map(_.getInt(1)).distinct.length <= 3, "only probed lists")
   }
 
+  /** Rows as value lists, each double replaced by its IEEE-754 bits. */
+  private def bits(rows: Array[org.apache.spark.sql.Row]): Seq[Seq[Any]] =
+    rows.toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    })
+
+  /** The number of Spark jobs `body` starts. */
+  private def jobsIn(body: => Any): Int = {
+    import org.apache.spark.graftglue.ListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet(): Unit
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { body; ListenerBus.drain(sc); n.get }
+    finally sc.removeSparkListener(l)
+  }
+
+  test("memoized ANN index: per-call rows bit for bit, warm search <= 2 jobs, clearMemo frees it") {
+    val e = spark.read.parquet(s"${TestSpark.Sf}/embeddings.parquet")
+    def ivf(q: Long, key: String) = bits(Similarity.ivfTopK(e, "vec_id", q,
+      nlist = 8, nprobe = 2, k = 5, memoKey = key).collect())
+    def pq(q: Long, key: String) =
+      bits(Similarity.pqTopK(e, "vec_id", q, memoKey = key).collect())
+    Caches.drain()
+    Caches.clearMemo()
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    for (q <- Seq(0L, 7L, 250L, 499L)) {
+      assert(ivf(q, "llmspec-ivf") == ivf(q, ""), s"IVF query $q")
+      assert(pq(q, "llmspec-pq") == pq(q, ""), s"PQ query $q")
+      Caches.drain()
+    }
+    val ivfJobs = jobsIn(ivf(123L, "llmspec-ivf"))
+    val pqJobs = jobsIn(pq(123L, "llmspec-pq"))
+    assert(ivfJobs <= 2 && pqJobs <= 2, s"warm searches: IVF $ivfJobs, PQ $pqJobs jobs")
+    Caches.drain()
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore + 2,
+      "one cached index per key")
+    Caches.clearMemo()
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
+      "clearMemo unpersists both indexes")
+  }
+
+  test("memoized ANN index: an appended file or a filtered frame never serves stale rows") {
+    val dir = java.nio.file.Files.createTempDirectory("ann-memo").toString + "/emb"
+    val src = spark.read.parquet(s"${TestSpark.Sf}/embeddings.parquet")
+    src.write.parquet(dir)
+    val q = 42L
+    // each search is one query: drained after it like the harnesses do, so
+    // no per-query training copy of the old files outlives it
+    def ids(r: => Array[org.apache.spark.sql.Row]) =
+      try r.map(_.getLong(0)).toSeq finally Caches.drain()
+    def ivf(df: org.apache.spark.sql.DataFrame) = ids(Similarity.ivfTopK(df, "vec_id", q,
+      nlist = 8, nprobe = 2, k = 5, memoKey = "llmspec-stale-ivf").collect())
+    def pq(df: org.apache.spark.sql.DataFrame) = ids(Similarity.pqTopK(df, "vec_id", q,
+      memoKey = "llmspec-stale-pq").collect())
+    val before = spark.read.parquet(dir)
+    val (ivf0, pq0) = (ivf(before), pq(before))
+    // a copy of the query's vector, under an id that sorts first among
+    // ties, moved in out of band: a Spark append to `dir` would itself
+    // refresh every cached plan that reads the path
+    val side = dir + "_side"
+    src.filter(col("vec_id") === q).withColumn("vec_id", lit(-1L))
+      .coalesce(1).write.parquet(side)
+    new java.io.File(side).listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => java.nio.file.Files.move(f.toPath, new java.io.File(dir, f.getName).toPath))
+    val after = spark.read.parquet(dir)
+    assert(ivf(after).head == -1L, s"IVF must see the appended file: ${ivf(after)}")
+    assert(pq(after).head == -1L, s"PQ must see the appended file: ${pq(after)}")
+    // the same files and key, filtered back to the old rows: its own index
+    val filtered = after.filter(col("vec_id") =!= -1L)
+    assert(ivf(filtered) == ivf0, "IVF over the filtered frame")
+    assert(pq(filtered) == pq0, "PQ over the filtered frame")
+  }
+
   test("SQL registration exposes st_*/vec_dot to spark.sql") {
     graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
